@@ -19,7 +19,9 @@ def main(argv: list[str] | None = None) -> int:
     if argv and argv[0] == "info":
         ip = argparse.ArgumentParser(prog="rosbag2parquet_spark info")
         ip.add_argument(
-            "--input", required=True, help="bag file (.bag = rosbag 2.0, else SBAG)"
+            "--input", required=True,
+            help="bag file (rosbag 2.0, SBAG, ROS 2 .db3 or MCAP) or a "
+            "converted layout",
         )
         args = ip.parse_args(argv[1:])
         from rosbag2parquet_spark.session import get_spark

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.plans.ddl import load_script
+from rosbag2parquet_spark.sources import ConnRow, conn_dim_df, open_bag, read_messages
 from rosbag2parquet_spark.sources.msgdef import table_name_for_type
 from rosbag2parquet_spark.sources.protobuf import PROTOBUF_DEF_PREFIX
 from rosbag2parquet_spark.sources.jsonschema import JSON_DEF_PREFIX
@@ -586,7 +587,6 @@ def convert_bag(
     conn_id column the source emits), the time range is a scan filter, and
     seqno renumbers contiguously over the kept rows — the output is a
     self-contained layout, not a view."""
-    from rosbag2parquet_spark.info import _fmt, load_bag, seqno_bucket_width
     from rosbag2parquet_spark.operators.keys import assign_seqno
 
     _validate_convert_paths(bag_path, out_dir)
@@ -612,75 +612,34 @@ def convert_bag(
             on_error=on_error,
         )
 
-    # start/end push into the SOURCE plan where the container supports it
-    # (MCAP ChunkIndex time bounds prune whole chunks; .db3 pushes a WHERE
-    # into sqlite); the DataFrame filters below remain as the exact gate
-    # for formats whose planner can't skip (and cost nothing when the
-    # source already pruned)
-    msgs, conns_df = load_bag(
-        spark, bag_path, num_partitions=num_partitions, msgdefs=msgdefs,
-        start_ns=start_ns, end_ns=end_ns, on_error=on_error,
-    )
-    fmt = _fmt(bag_path)
-    if fmt == "rosbag2":
-        serialization = "cdr"
-    elif fmt == "mcap":
-        from rosbag2parquet_spark.sources.mcap import mcap_serialization
-
-        serialization = mcap_serialization(bag_path)
-    else:
-        serialization = "ros1"
-
+    # start/end/topics push into the SOURCE plan where the container can
+    # skip (rosbag ChunkInfo, MCAP ChunkIndex, the .db3 sqlite WHERE);
+    # read_messages applies them exactly either way
+    bag = open_bag(bag_path, msgdefs)
+    fmt = bag.format
+    conn_rows = list(bag.conn_rows)
+    keep_ids = None
     if topics is not None:
-        keep = conns_df.filter(F.col("topic").isin(list(topics)))
-        keep_ids = [r.connection_id for r in keep.collect()]
-        if not keep_ids:
+        wanted = set(topics)
+        conn_rows = [r for r in conn_rows if r.topic in wanted]
+        if not conn_rows:
             raise ValueError(
                 f"no connections match topics {topics!r} in {bag_path}"
             )
-        conns_df = keep
-        if fmt == "rosbag2":
-            # topic selection pushes into the sqlite WHERE too — re-plan
-            # the scan with the resolved conn ids (the dim read above is
-            # the only reason this comes second; the replan is plan-time
-            # only, no data was touched yet)
-            from rosbag2parquet_spark.sources.rosbag2 import read_rosbag2
-
-            msgs = read_rosbag2(
-                spark, bag_path, num_partitions=num_partitions,
-                start_ns=start_ns, end_ns=end_ns, conn_ids=keep_ids,
-            )
-        elif fmt == "mcap":
-            # MessageIndex channel membership prunes whole chunks for the
-            # selected topics (plan-time, no decompression)
-            from rosbag2parquet_spark.sources.mcap import read_mcap
-
-            msgs = read_mcap(
-                spark, bag_path, num_partitions=num_partitions,
-                start_ns=start_ns, end_ns=end_ns, conn_ids=keep_ids,
-                on_error=on_error,
-            )
-        elif fmt == "rosbag":
-            # ChunkInfo stats prune chunks without the selected topics
-            from rosbag2parquet_spark.sources.rosbag import read_rosbag
-
-            msgs = read_rosbag(
-                spark, bag_path, num_partitions=num_partitions,
-                start_ns=start_ns, end_ns=end_ns, conn_ids=keep_ids,
-            )
-        msgs = msgs.filter(F.col("conn_id").isin(keep_ids))
-    if start_ns is not None:
-        msgs = msgs.filter(F.col("time_ns") >= start_ns)
-    if end_ns is not None:
-        msgs = msgs.filter(F.col("time_ns") < end_ns)
+        keep_ids = [r.connection_id for r in conn_rows]
+    _require_msg_defs(bag_path, conn_rows)
+    serialization = bag.serialization
+    msgs = read_messages(
+        spark, bag, num_partitions, start_ns=start_ns, end_ns=end_ns,
+        conn_ids=keep_ids, on_error=on_error,
+    )
 
     # explicit bucket sized to THIS bag's offset encoding: the default
     # integer bucket (div 100000) makes ~2^shift/1e5 map entries per chunk
     # on the sparse (chunk_index << shift) offsets — a planning blow-up on
     # multi-GB bags (ADVICE r2)
-    width = seqno_bucket_width(bag_path)
     seq = assign_seqno(
-        msgs, ["offset"], bucket=F.expr(f"offset div {width}")
+        msgs, ["offset"], bucket=F.expr(f"offset div {bag.width}")
     )
     if max_mbs is not None:
         # the reference's byte-bounded scan limit applies to BAG input
@@ -727,7 +686,7 @@ def convert_bag(
     )
     count, size = _write_bag_tables(
         seq,
-        conns_df,
+        conn_rows,
         out_dir,
         arrays=arrays,
         unsigned=unsigned,
@@ -898,7 +857,6 @@ def resume_convert_bag(
 
     The reference has no incremental story (rosbag2parquet.cpp converts
     whole files); this is the operational upgrade a 100 TB fleet needs."""
-    from rosbag2parquet_spark.info import _fmt, load_bag, seqno_bucket_width
     from rosbag2parquet_spark.operators.keys import assign_seqno
 
     state_path = os.path.join(out_dir, INGEST_STATE)
@@ -910,7 +868,8 @@ def resume_convert_bag(
         )
     with open(state_path) as f:
         state = json.load(f)
-    fmt = _fmt(bag_path)
+    bag = open_bag(bag_path, msgdefs)
+    fmt = bag.format
     if os.path.basename(bag_path) != state["bag"] or fmt != state["format"]:
         raise ValueError(
             f"{bag_path} ({fmt}) does not match the layout's recorded bag "
@@ -933,18 +892,16 @@ def resume_convert_bag(
                 "byte offsets shifted; re-convert from scratch"
             )
 
+    _require_msg_defs(bag_path, bag.conn_rows)
+
     arrays = state["arrays"]
     unsigned = state["unsigned"]
     serialization = state["serialization"]
     att_df = None
     md_df = None
+    start_offset = start_chunk = None
     if fmt == "mcap":
-        from rosbag2parquet_spark.sources.mcap import (
-            mcap_connections_df,
-            mcap_serialization,
-            read_mcap,
-            scan_mcap,
-        )
+        from rosbag2parquet_spark.sources.mcap import scan_mcap
 
         scan = scan_mcap(bag_path)
         n_prev = int(state["n_chunks"])
@@ -968,15 +925,11 @@ def resume_convert_bag(
                     f"({want} -> {got}) — the bag was re-recorded, not "
                     "grown; re-convert from scratch"
                 )
-        if mcap_serialization(bag_path) != serialization:
+        if bag.serialization != serialization:
             raise ValueError(
                 f"{bag_path}: serialization changed since conversion"
             )
-        msgs = read_mcap(
-            spark, bag_path, num_partitions=num_partitions,
-            on_error=on_error, start_chunk=n_prev,
-        )
-        conns_df = mcap_connections_df(spark, bag_path)
+        start_chunk = n_prev
         att_df = _new_attachments_df(spark, bag_path, out_dir)
         md_df = _new_metadata_df(spark, bag_path, out_dir)
     else:
@@ -989,11 +942,11 @@ def resume_convert_bag(
                     f"{state['last_time_ns']} — the bag was re-recorded, "
                     "not grown; re-convert from scratch"
                 )
-        cursor = int(state["next_offset"])
-        msgs, conns_df = load_bag(
-            spark, bag_path, num_partitions=num_partitions, msgdefs=msgdefs,
-            on_error=on_error, start_offset=cursor,
-        )
+        start_offset = int(state["next_offset"])
+    msgs = read_messages(
+        spark, bag, num_partitions, start_offset=start_offset,
+        start_chunk=start_chunk, on_error=on_error,
+    )
 
     # dim reconciliation: existing ids are kept verbatim; a grown bag may
     # DECLARE new connections (new topics mid-recording) — those append.
@@ -1004,10 +957,10 @@ def resume_convert_bag(
             os.path.join(out_dir, "Connections")
         ).collect()
     }
-    from rosbag2parquet_spark.sources import conn_rows_of
-
+    # new_rows is always a list (possibly EMPTY) — None under append would
+    # re-write the full dim as duplicate rows
     new_rows = []
-    for r in conn_rows_of(conns_df):
+    for r in bag.conn_rows:
         if r.connection_id in existing:
             if tuple(r) != existing[r.connection_id]:
                 raise ValueError(
@@ -1015,14 +968,9 @@ def resume_convert_bag(
                     f"conversion: {existing[r.connection_id]} -> {tuple(r)}"
                 )
         else:
-            new_rows.append(tuple(r))
-    # always a frame (possibly EMPTY) — passing None under append would
-    # re-write the full dim as duplicate rows
-    conns_write_df = spark.createDataFrame(new_rows, conns_df.schema)
-
-    width = seqno_bucket_width(bag_path)
+            new_rows.append(r)
     cached = assign_seqno(
-        msgs, ["offset"], bucket=F.expr(f"offset div {width}")
+        msgs, ["offset"], bucket=F.expr(f"offset div {bag.width}")
     ).cache()
     seq = cached
     tail = seq.agg(
@@ -1043,7 +991,7 @@ def resume_convert_bag(
         )
     count, size = _write_bag_tables(
         seq,
-        conns_df,
+        bag.conn_rows,
         out_dir,
         arrays=arrays,
         unsigned=unsigned,
@@ -1052,7 +1000,7 @@ def resume_convert_bag(
         serialization=serialization,
         on_error=on_error,
         mode="append",
-        conns_write_df=conns_write_df,
+        new_conn_rows=new_rows,
         attachments_df=att_df,
         metadata_df=md_df,
     )
@@ -1335,7 +1283,7 @@ def _validate_convert_paths(in_path: str, out_dir: str) -> None:
 
 def _write_bag_tables(
     seq: DataFrame,
-    conns_df: DataFrame,
+    conn_rows: "list[ConnRow]",
     out_dir: str,
     *,
     arrays: str,
@@ -1346,7 +1294,7 @@ def _write_bag_tables(
     on_error: str = "fail",
     mode: str = "overwrite",
     evolve: bool = False,
-    conns_write_df: "DataFrame | None" = None,
+    new_conn_rows: "list[ConnRow] | None" = None,
     attachments_df: "DataFrame | None" = None,
     metadata_df: "DataFrame | None" = None,
     bags_df: "DataFrame | None" = None,
@@ -1363,8 +1311,8 @@ def _write_bag_tables(
     ``mode='append'`` adds the batch to an existing layout: every touched
     table passes the schema-fingerprint guard (the reference's md5 identity
     check, FlattenedRosWriter.cpp:287), new per-type tables create their
-    own dirs, and ``conns_write_df`` (the genuinely-NEW dim rows only)
-    lands on disk while the full ``conns_df`` still drives the per-type
+    own dirs, and ``new_conn_rows`` (the genuinely-NEW dim rows only)
+    land on disk while the full ``conn_rows`` still drive the per-type
     decode."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
@@ -1375,11 +1323,11 @@ def _write_bag_tables(
     else:
         from rosbag2parquet_spark.sources.decode import decode_messages
 
-    from rosbag2parquet_spark.sources import conn_rows_of
-
-    # tiny dim (reference snapshots it at open); the driver-parsed memo
-    # serves it without a job when conns_df came straight from a builder
-    conn_rows = conn_rows_of(conns_df)
+    # tiny dim, driver-side (reference snapshots it at open)
+    conns_out = conn_dim_df(
+        seq.sparkSession,
+        conn_rows if new_conn_rows is None else new_conn_rows,
+    )
     _check_compression(compression)
 
     # ---- Messages (seqno, time_sec, time_nsec, size, connection_id)
@@ -1464,7 +1412,7 @@ def _write_bag_tables(
     # untouched, never half-appended
     tables = {
         "Messages": messages.schema,
-        "Connections": conns_df.schema,
+        "Connections": conns_out.schema,
         "Stats": stats.schema,
     }
     pertype_writes: list = []
@@ -1668,11 +1616,7 @@ def _write_bag_tables(
 
     with ThreadPoolExecutor(max_workers=4) as _pool:
         _futs = [
-            _pool.submit(
-                _write_table,
-                conns_write_df if conns_write_df is not None else conns_df,
-                conn_path,
-            ),
+            _pool.submit(_write_table, conns_out, conn_path),
             _pool.submit(_write_table, stats, stats_path),
         ]
         _futs += [
@@ -1762,118 +1706,16 @@ def _remap_key_col():
     )
 
 
-def _bag_scan_meta(path: str, msgdefs: "dict[str, str] | None" = None) -> dict:
-    """Per-bag driver-side metadata for the multi-bag planner, one header
-    walk per file (parallelized across files by the caller — the reference's
-    View construction is per-bag too, rosbag2parquet.cpp:44-47):
-    the DETECTED grammar (magic bytes, not extension — the reader dispatch
-    key for the rest of the pipeline), connection rows padded to the
-    7-column rosbag dim shape, the seqno bucket width for THIS bag's offset
-    encoding, and an upper bound on its largest offset (sizes the per-bag
-    bucket-index slot)."""
-    from rosbag2parquet_spark.sources.baglike import bag_format
-
-    fmt = bag_format(path)
-    if fmt is None:
+def _require_msg_defs(path: str, conn_rows) -> None:
+    """Refuse, before any Spark job, connections whose definition text is
+    unresolved (a pre-Iron .db3 embeds none) — the decode needs it."""
+    missing = sorted({r.datatype for r in conn_rows if r.msg_def is None})
+    if missing:
         raise ValueError(
-            f"{path}: neither rosbag 2.0 nor SBAG magic bytes — not a bag"
+            f"{path}: no message definition for {missing} — the bag embeds "
+            "none (pre-Iron storage has no message_definitions table); "
+            "pass msgdefs={type: text}"
         )
-    if fmt == "rosbag":
-        from rosbag2parquet_spark.sources.rosbag import offset_shift, scan_rosbag
-
-        conns, chunks = scan_rosbag(path)  # memoized: one walk per file
-        shift = offset_shift(chunks)
-        stride = 1 << shift
-        width = stride * max(1, -(-len(chunks) // 64))
-        max_offset = (len(chunks) + 1) << shift
-        chunk_refs = chunks  # threaded into the datasource planner
-        # normalize absent callerid/latching to "" so the same logical
-        # connection in a rosbag (absent -> None) and an SBAG (padded "")
-        # reconciles to ONE global identity
-        rows = [
-            (c.conn_id, c.topic, c.datatype, c.md5sum, c.msg_def,
-             c.callerid or "", c.latching or "")
-            for c in conns
-        ]
-    elif fmt == "rosbag2":
-        import sqlite3
-
-        from rosbag2parquet_spark.sources.rosbag2 import (
-            read_embedded_msgdefs,
-            read_topics,
-        )
-
-        resolved = read_embedded_msgdefs(path)
-        resolved.update(msgdefs or {})
-        topics = read_topics(path)
-        missing = sorted({t.datatype for t in topics} - set(resolved))
-        if missing:
-            raise ValueError(
-                f"rosbag2 {path}: no message definition for {missing} — the "
-                "bag embeds none; pass msgdefs={type: text}"
-            )
-        rows = [
-            (t.topic_id, t.name, t.datatype, "", resolved[t.datatype], "", "")
-            for t in topics
-        ]
-        con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-        try:
-            (hi,) = con.execute("SELECT max(id) FROM messages").fetchone()
-        finally:
-            con.close()
-        # offsets are DENSE rowids — width sized so the driver-side
-        # prefix-sum map stays ≤ ~64 entries whatever the shard size
-        max_offset = (hi or 0) + 1
-        width = max(1, -(-max_offset // 64))
-        chunk_refs = None
-        serialization = "cdr"
-    elif fmt == "mcap":
-        from rosbag2parquet_spark.sources.mcap import (
-            mcap_connection_rows,
-            mcap_serialization,
-            scan_mcap,
-        )
-        from rosbag2parquet_spark.sources.mcap import (
-            seqno_bucket_width as _mcap_width,
-        )
-        from rosbag2parquet_spark.sources.mcap import offset_shift as _mcap_shift
-
-        scan = scan_mcap(path)
-        # senc-aware msg_def (protobuf marker / idl blob-preserve) — the
-        # same rows the single-bag dim emits, so fleet decodability agrees
-        rows = mcap_connection_rows(path)
-        width = _mcap_width(path)
-        if scan.chunks:
-            max_offset = (len(scan.chunks) + 1) << _mcap_shift(scan.chunks)
-        else:
-            max_offset = os.path.getsize(path) + 1
-        chunk_refs = None
-        serialization = mcap_serialization(path)
-    else:
-        from rosbag2parquet_spark.sources.baglike import read_header
-
-        conns, _ = read_header(path)
-        size = os.path.getsize(path)
-        width = max(100_000, size // 64 + 1)
-        max_offset = size + 1
-        # SBAG header has no callerid/latching — pad like rosbag's own
-        # default ("" when the connection header omits them)
-        rows = [
-            (c.conn_id, c.topic, c.datatype, c.md5sum, c.msg_def, "", "")
-            for c in conns
-        ]
-        chunk_refs = None
-    if fmt in ("rosbag", "sbag"):
-        serialization = "ros1"
-    return {
-        "path": path,
-        "format": fmt,
-        "chunks": chunk_refs,
-        "rows": rows,
-        "width": width,
-        "max_offset": max_offset,
-        "serialization": serialization,
-    }
 
 
 def _looks_like_bag(path: str) -> bool:
@@ -1968,16 +1810,22 @@ def convert_bags(
     from concurrent.futures import ThreadPoolExecutor
 
     from rosbag2parquet_spark.operators.keys import assign_seqno
-    from rosbag2parquet_spark.sources.baglike import read_bag
-    from rosbag2parquet_spark.sources.rosbag import read_rosbag
 
     paths = resolve_bag_paths(bags)  # raises on an empty resolution
     for p in paths:
         _validate_convert_paths(p, out_dir)
+        if not _looks_like_bag(p):
+            raise ValueError(
+                f"{p}: no rosbag 2.0, SBAG, ROS 2 .db3 or MCAP magic bytes "
+                "— not a bag"
+            )
+    # one header walk per file, concurrently (I/O bound)
     with ThreadPoolExecutor(max_workers=min(8, len(paths))) as pool:
-        metas = list(pool.map(lambda p: _bag_scan_meta(p, msgdefs), paths))
+        opened = list(pool.map(lambda p: open_bag(p, msgdefs), paths))
+    for bag in opened:
+        _require_msg_defs(bag.path, bag.conn_rows)
 
-    serializations = sorted({m["serialization"] for m in metas})
+    serializations = sorted({bag.serialization for bag in opened})
     if len(serializations) > 1:
         raise ValueError(
             f"fleet mixes payload serializations {serializations} — the "
@@ -2004,19 +1852,27 @@ def convert_bags(
                 .orderBy("connection_id")
                 .collect()
             )
+            raw_ids: dict[tuple, int] = {}
             for r in existing:
-                key = (
-                    r.topic, r.datatype, r.md5sum, r.msg_def,
-                    r.callerid, r.latching,
-                )
-                if key in gid:
+                raw = tuple(r)[1:]
+                if raw in raw_ids:
                     raise ValueError(
                         f"{conn_path}: duplicate connection identity for "
-                        f"ids {gid[key]} and {r.connection_id} — corrupt "
+                        f"ids {raw_ids[raw]} and {r.connection_id} — corrupt "
                         "dim; cannot append"
                     )
+                raw_ids[raw] = r.connection_id
+                # layouts written before callerid/latching were normalized
+                # hold NULL where open_bag now reports "" — and an append
+                # onto one may hold both spellings; the first id keeps it
+                key = (
+                    r.topic, r.datatype, r.md5sum, r.msg_def,
+                    r.callerid or "", r.latching or "",
+                )
+                if key in gid:
+                    continue
                 gid[key] = r.connection_id
-                dim_rows.append((r.connection_id, *key))
+                dim_rows.append(ConnRow(r.connection_id, *key))
                 next_id = max(next_id, r.connection_id + 1)
             n_seeded = len(gid)
         msg_path = os.path.join(out_dir, "Messages")
@@ -2026,54 +1882,28 @@ def convert_bags(
             )
             prev_max_seqno = -1 if prev_max_seqno is None else int(prev_max_seqno)
     remap: dict[int, int] = {}  # bag_index*STRIDE + local conn_id -> global
-    for i, meta in enumerate(metas):
-        for row in meta["rows"]:
+    for i, bag in enumerate(opened):
+        for row in bag.conn_rows:
             key = tuple(row[1:])
             if key not in gid:
                 gid[key] = next_id
                 next_id += 1
-                dim_rows.append((gid[key], *key))
-            remap[i * _CONN_KEY_STRIDE + row[0]] = gid[key]
+                dim_rows.append(ConnRow(gid[key], *key))
+            remap[i * _CONN_KEY_STRIDE + row.connection_id] = gid[key]
     if not remap:
         raise ValueError(f"no connections found in any of {len(paths)} bag(s)")
-    conns_df = spark.createDataFrame(
-        dim_rows,
-        "connection_id int, topic string, datatype string, md5sum string, "
-        "msg_def string, callerid string, latching string",
-    )
 
     # ---- one unioned message stream, conn ids remapped to the global dim.
-    # The message readers are called directly — the connections dim above is
-    # already built from the metas, so going through info.load_bag would
-    # re-walk every bag header a second time for a result that's discarded.
     # num_partitions is the TOTAL scan parallelism, allocated to each bag
     # proportional to its bytes: giving every bag the full count multiplies
     # tiny Python-datasource tasks by the fleet size (a 10k-bag fleet would
     # plan 320k partitions; measured 2.4x slowdown at 4 bags already)
-    sizes = [os.path.getsize(m["path"]) for m in metas]
+    sizes = [os.path.getsize(bag.path) for bag in opened]
     total_bytes = sum(sizes) or 1
     union = None
-    for i, meta in enumerate(metas):
+    for i, bag in enumerate(opened):
         nparts = max(1, round(num_partitions * sizes[i] / total_bytes))
-        if meta["format"] == "rosbag":
-            msgs = read_rosbag(
-                spark,
-                meta["path"],
-                num_partitions=nparts,
-                chunks=meta["chunks"],  # planner skips its own header walk
-            )
-        elif meta["format"] == "rosbag2":
-            from rosbag2parquet_spark.sources.rosbag2 import read_rosbag2
-
-            msgs = read_rosbag2(spark, meta["path"], num_partitions=nparts)
-        elif meta["format"] == "mcap":
-            from rosbag2parquet_spark.sources.mcap import read_mcap
-
-            msgs = read_mcap(
-                spark, meta["path"], num_partitions=nparts, on_error=on_error
-            )
-        else:
-            msgs = read_bag(spark, meta["path"], num_partitions=nparts)
+        msgs = read_messages(spark, bag, nparts, on_error=on_error)
         msgs = msgs.withColumn("bag_index", F.lit(i))
         union = msgs if union is None else checked_union(union, msgs)
     key = _remap_key_col()
@@ -2110,8 +1940,8 @@ def convert_bags(
     # ---- continuous seqno across bags: bucket = bag slot + in-bag bucket.
     # One shared width (the coarsest bag's) keeps every bag ≤ ~64 buckets;
     # the slot bound M guarantees bucket monotonicity in (bag_index, offset).
-    width = max(m["width"] for m in metas)
-    slot = 1 + max(m["max_offset"] // width for m in metas)
+    width = max(bag.width for bag in opened)
+    slot = 1 + max(bag.max_offset // width for bag in opened)
     seq = assign_seqno(
         union,
         ["bag_index", "offset"],
@@ -2148,13 +1978,7 @@ def convert_bags(
 
     # append writes only the genuinely-new dim rows; the decode still sees
     # the full dim (a type may span old and new connections)
-    conns_write_df = None
-    if mode == "append":
-        conns_write_df = spark.createDataFrame(
-            dim_rows[n_seeded:] or [],
-            "connection_id int, topic string, datatype string, md5sum "
-            "string, msg_def string, callerid string, latching string",
-        )
+    new_conn_rows = dim_rows[n_seeded:] if mode == "append" else None
 
     # MCAP side-car attachments across the fleet, with bag provenance —
     # the shared 7-column shape; under append, bag_index continues after
@@ -2180,36 +2004,32 @@ def convert_bags(
                     )
         prevs = [p for p in prevs if p is not None]
         base_bag_index = (max(prevs) if prevs else -1) + 1
-    for i, meta in enumerate(metas):
-        if meta["format"] == "mcap":
+    for i, bag in enumerate(opened):
+        if bag.format == "mcap":
             from rosbag2parquet_spark.sources.mcap import mcap_attachments
 
-            for lt, ct, aname, media, adata in mcap_attachments(meta["path"]):
+            for lt, ct, aname, media, adata in mcap_attachments(bag.path):
                 att_rows.append(
-                    (base_bag_index + i, os.path.basename(meta["path"]),
+                    (base_bag_index + i, os.path.basename(bag.path),
                      aname, media, lt, ct, bytes(adata))
                 )
-            md_rows += _metadata_rows(meta["path"], base_bag_index + i)
+            md_rows += _metadata_rows(bag.path, base_bag_index + i)
     if att_rows:
         att_df = spark.createDataFrame(att_rows, _ATTACHMENTS_SCHEMA)
     if md_rows:
         md_df = spark.createDataFrame(md_rows, _METADATA_SCHEMA)
     bags_df = spark.createDataFrame(
         [
-            (
-                base_bag_index + i,
-                os.path.basename(meta["path"]),
-                meta["path"],
-                meta["format"],
-            )
-            for i, meta in enumerate(metas)
+            (base_bag_index + i, os.path.basename(bag.path), bag.path,
+             bag.format)
+            for i, bag in enumerate(opened)
         ],
         _BAGS_SCHEMA,
     )
 
     count, size = _write_bag_tables(
         seq,
-        conns_df,
+        dim_rows,
         out_dir,
         arrays=arrays,
         unsigned=unsigned,
@@ -2219,7 +2039,7 @@ def convert_bags(
         on_error=on_error,
         mode=mode,
         evolve=evolve,
-        conns_write_df=conns_write_df,
+        new_conn_rows=new_conn_rows,
         attachments_df=att_df,
         metadata_df=md_df,
         bags_df=bags_df,

@@ -12,135 +12,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rosbag2parquet_spark.sources.baglike import bag_format, connections_df, read_bag
-
-
-def _fmt(path: str) -> str:
-    """Reader dispatch key: detected magic bytes win; extension only breaks
-    the tie for unreadable/magicless files (so the matching reader raises
-    its own clear error instead of the wrong grammar's)."""
-    return bag_format(path) or ("rosbag" if path.endswith(".bag") else "sbag")
-
-
-def load_bag(
-    spark: SparkSession,
-    path: str,
-    num_partitions: int = 8,
-    msgdefs: "dict[str, str] | None" = None,
-    start_ns: "int | None" = None,
-    end_ns: "int | None" = None,
-    on_error: str = "fail",
-    start_offset: "int | None" = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(messages, connections) for any bag generation, detected from magic
-    bytes: rosbag 2.0 record/chunk format, ROS 2 rosbag2 (.db3 sqlite3
-    storage — definitions read from the embedded ``message_definitions``
-    table when present (Iron+), else from caller-supplied ``msgdefs``), or
-    the SBAG test format. All yield the same
-    (offset, time_ns, conn_id, data) scan schema.
-
-    ``start_offset`` (incremental-resume cursor) is supported where the
-    container's offsets are append-stable — .db3 (sqlite rowids) and SBAG
-    (byte offsets under pure append); rosbag/MCAP offsets are synthetic
-    chunk-index encodings whose shift can change as the file grows, so
-    the cursor is refused there."""
-    fmt = _fmt(path)
-    if start_offset is not None and fmt in ("rosbag", "mcap"):
-        raise ValueError(
-            f"start_offset resume is not supported for {fmt}: its offsets "
-            "are synthetic chunk-index encodings, not append-stable; "
-            "convert new files via the fleet append instead"
-        )
-    if fmt == "rosbag":
-        from rosbag2parquet_spark.sources.rosbag import (
-            read_rosbag,
-            rosbag_connections_df,
-        )
-
-        return (
-            read_rosbag(
-                spark, path, num_partitions=num_partitions,
-                start_ns=start_ns, end_ns=end_ns,
-            ),
-            rosbag_connections_df(spark, path),
-        )
-    if fmt == "mcap":
-        from rosbag2parquet_spark.sources.mcap import (
-            mcap_connections_df,
-            read_mcap,
-        )
-
-        return (
-            read_mcap(
-                spark, path, num_partitions=num_partitions,
-                start_ns=start_ns, end_ns=end_ns, on_error=on_error,
-            ),
-            mcap_connections_df(spark, path),
-        )
-    if fmt == "rosbag2":
-        from rosbag2parquet_spark.sources.rosbag2 import (
-            read_rosbag2,
-            rosbag2_connections_df,
-        )
-
-        return (
-            read_rosbag2(
-                spark, path, num_partitions=num_partitions,
-                start_ns=start_ns, end_ns=end_ns,
-                start_offset=start_offset,
-            ),
-            rosbag2_connections_df(spark, path, msgdefs),
-        )
-    return (
-        read_bag(
-            spark, path, num_partitions=num_partitions,
-            start_offset=start_offset,
-        ),
-        connections_df(spark, path),
-    )
-
-
-def seqno_bucket_width(path: str) -> int:
-    """Bucket width for ``assign_seqno`` over this bag's offsets, sized so
-    the driver-side prefix-sum map stays ≤ ~64 entries whatever the bag
-    size. ``.bag`` offsets are the sparse (chunk_index << shift) encoding —
-    the width must be a stride multiple (rosbag.seqno_bucket_width); SBAG
-    offsets are dense file byte positions, so file_size/64 works."""
-    if _fmt(path) == "rosbag":
-        from rosbag2parquet_spark.sources.rosbag import (
-            seqno_bucket_width as _bag_width,
-        )
-
-        return _bag_width(path)
-    if _fmt(path) == "mcap":
-        from rosbag2parquet_spark.sources.mcap import (
-            seqno_bucket_width as _mcap_width,
-        )
-
-        return _mcap_width(path)
-    if _fmt(path) == "rosbag2":
-        # .db3 offsets are dense rowids, not byte positions — bucket by the
-        # rowid span (getsize/64 would collapse every row into one bucket)
-        import sqlite3
-
-        con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-        try:
-            lo, hi = con.execute(
-                "SELECT min(id), max(id) FROM messages"
-            ).fetchone()
-        finally:
-            con.close()
-        span = (hi - lo + 1) if lo is not None else 1
-        return max(1, span // 64 + 1)
-    import os
-
-    return max(100_000, os.path.getsize(path) // 64 + 1)
+from rosbag2parquet_spark.sources import conn_dim_df, open_bag, read_messages
 
 
 def bag_info(spark: SparkSession, path: str) -> DataFrame:
     """Per-(datatype, topic) stats + per-type and global rollup rows
-    (topic NULL → per-type subtotal; both NULL → grand total)."""
-    msgs, conns = load_bag(spark, path)
+    (topic NULL → per-type subtotal; both NULL → grand total). Definition
+    text is never read, so a pre-Iron .db3 needs no ``msgdefs``."""
+    bag = open_bag(path)
+    msgs = read_messages(spark, bag)
+    conns = conn_dim_df(spark, bag.conn_rows)
     joined = msgs.join(F.broadcast(conns), msgs.conn_id == conns.connection_id)
     agg = (
         joined.rollup("datatype", "topic")
@@ -174,7 +55,7 @@ def print_info(spark: SparkSession, path: str) -> None:
         tag = "TOTAL" if r.datatype == "<all>" else f"{r.datatype} {r.topic}"
         freq = f" @ {r.freq_hz} Hz" if r.freq_hz is not None else ""
         print(f"  {tag}: {r.n_msgs} msgs, {r.total_bytes} bytes{freq}")
-    if _fmt(path) == "mcap":
+    if open_bag(path).format == "mcap":
         from rosbag2parquet_spark.sources.mcap import (
             mcap_attachment_stats,
             mcap_metadata,

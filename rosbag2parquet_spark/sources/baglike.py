@@ -294,19 +294,6 @@ def connections_df(spark: SparkSession, path: str) -> DataFrame:
     full 7-column shape (README.md:35-42) — callerid/latching are padded
     "" for SBAG, which doesn't carry them — so single-bag and fleet
     conversions produce union-compatible Connections tables."""
-    from rosbag2parquet_spark.sources import attach_conn_rows
+    from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 
-    conns, _ = read_header(path)
-    rows = [
-        (c.conn_id, c.topic, c.datatype, c.md5sum, c.msg_def,
-         c.callerid or "", c.latching or "")
-        for c in conns
-    ]
-    return attach_conn_rows(
-        spark.createDataFrame(
-            rows,
-            "connection_id int, topic string, datatype string, md5sum string, "
-            "msg_def string, callerid string, latching string",
-        ),
-        rows,
-    )
+    return conn_dim_df(spark, open_bag(path).conn_rows)

@@ -668,17 +668,9 @@ def mcap_connections_df(spark: SparkSession, path: str) -> DataFrame:
     """Connections dim from the embedded Channel+Schema records — the
     engine's 7-column shape; see :func:`mcap_connection_rows` for the
     per-encoding msg_def contract."""
-    from rosbag2parquet_spark.sources import attach_conn_rows
+    from rosbag2parquet_spark.sources import conn_dim_df
 
-    rows = mcap_connection_rows(path)
-    return attach_conn_rows(
-        spark.createDataFrame(
-            rows,
-            "connection_id int, topic string, datatype string, md5sum string, "
-            "msg_def string, callerid string, latching string",
-        ),
-        rows,
-    )
+    return conn_dim_df(spark, mcap_connection_rows(path))
 
 
 def _parse_attachment(buf: bytes, s: int, ln: int, path: str) -> tuple:

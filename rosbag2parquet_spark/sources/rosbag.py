@@ -552,22 +552,11 @@ def prune_chunks(
 
 def rosbag_connections_df(spark: SparkSession, path: str) -> DataFrame:
     """The Connections dim with the reference's full column set including
-    callerid and latching (FlattenedRosWriter.cpp:209-224, README.md:35-42)."""
-    from rosbag2parquet_spark.sources import attach_conn_rows
+    callerid and latching (FlattenedRosWriter.cpp:209-224, README.md:35-42);
+    absent fields are "" like every other grammar's."""
+    from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 
-    conns, _ = scan_rosbag(path)
-    rows = [
-        (c.conn_id, c.topic, c.datatype, c.md5sum, c.msg_def, c.callerid, c.latching)
-        for c in conns
-    ]
-    return attach_conn_rows(
-        spark.createDataFrame(
-            rows,
-            "connection_id int, topic string, datatype string, md5sum string, "
-            "msg_def string, callerid string, latching string",
-        ),
-        rows,
-    )
+    return conn_dim_df(spark, open_bag(path).conn_rows)
 
 
 def seqno_bucket_width(path: str) -> int:

@@ -263,32 +263,11 @@ def rosbag2_connections_df(
     resolved embedded-first (``message_definitions`` table, Iron+) with
     caller-supplied ``msgdefs`` overriding/filling — so the common modern
     bag needs no side channel, matching the reference's
-    schema-travels-in-the-bag property (README.md:116-117)."""
-    topics = read_topics(path)
-    resolved = read_embedded_msgdefs(path)
-    resolved.update(msgdefs or {})
-    msgdefs = resolved
-    missing = sorted({t.datatype for t in topics} - set(msgdefs))
-    if missing:
-        raise ValueError(
-            f"rosbag2 {path}: no message definition for {missing} — the bag "
-            "embeds none (pre-Iron storage has no message_definitions "
-            "table); pass msgdefs={type: text}"
-        )
-    from rosbag2parquet_spark.sources import attach_conn_rows
+    schema-travels-in-the-bag property (README.md:116-117). An unresolved
+    type's msg_def is NULL; the converter refuses it before any job."""
+    from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 
-    rows = [
-        (t.topic_id, t.name, t.datatype, "", msgdefs[t.datatype], "", "")
-        for t in topics
-    ]
-    return attach_conn_rows(
-        spark.createDataFrame(
-            rows,
-            "connection_id int, topic string, datatype string, md5sum string, "
-            "msg_def string, callerid string, latching string",
-        ),
-        rows,
-    )
+    return conn_dim_df(spark, open_bag(path, msgdefs).conn_rows)
 
 
 _SCAN_SCHEMA = T.StructType(

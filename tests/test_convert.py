@@ -384,38 +384,3 @@ def test_publish_scratch_race_drops_loser_and_reraises_real_errors(tmp_path):
     with pytest.raises(OSError):
         publish_scratch(str(work2), str(tmp_path / "no_parent" / "x"))
     assert work2.exists()  # nothing silently discarded on a real error
-
-
-def test_conn_rows_memo_matches_collect(spark, tmp_path):
-    """r13: the driver-parsed Connections memo served to the converter
-    must equal a real collect of the same frame, field for field — and a
-    DERIVED frame (filter) must fall back to collect, never serve the
-    parent's memo."""
-    from rosbag2parquet_spark.sources import conn_rows_of
-    from rosbag2parquet_spark.sources.baglike import (
-        ConnectionInfo,
-        connections_df,
-        write_bag,
-    )
-
-    bag = str(tmp_path / "memo.sbag")
-    conns = [
-        ConnectionInfo(
-            conn_id=i,
-            topic=f"/t{i}",
-            datatype="std_msgs/String",
-            md5sum=f"md5-{i}",
-            msg_def="string data\n",
-        )
-        for i in range(3)
-    ]
-    write_bag(bag, conns, [(0, 1, b"\x00\x00\x00\x00")])
-    df = connections_df(spark, bag)
-    memo = conn_rows_of(df)
-    collected = df.collect()
-    assert [tuple(r) for r in memo] == [tuple(r) for r in collected]
-    assert [r.asDict() for r in memo] == [r.asDict() for r in collected]
-    filtered = df.filter("connection_id = 1")
-    assert [tuple(r) for r in conn_rows_of(filtered)] == [
-        tuple(r) for r in filtered.collect()
-    ]

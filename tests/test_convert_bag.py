@@ -102,22 +102,68 @@ def test_convert_bag_unsigned_exact(spark, tmp_path):
     assert row.n == 3_000_000_000
 
 
-def test_convert_bag_topic_and_time_filter(spark, two_type_bag, tmp_path):
+@pytest.fixture(scope="module", params=["sbag", "rosbag", "db3", "mcap"])
+def subset_bag(request, tmp_path_factory):
+    """``two_type_bag``'s two-topic timeline in every grammar (.db3 carries
+    CDR payloads of its own Imu/Gps definitions; MCAP chunks two messages
+    at a time so the time bounds can prune whole chunks)."""
+    kind = request.param
+    path = str(tmp_path_factory.mktemp("subset") / f"two_types.{kind}")
+    if kind == "db3":
+        from rosbag2parquet_spark.sources.rosbag2 import write_db3
+        from tests.test_resume import GPS_DEF as CDR_GPS_DEF, _gps
+        from tests.test_rosbag2 import IMU_DEF as CDR_IMU_DEF, encode_imu
+
+        imu, gps, imu_def, gps_def = (
+            encode_imu(0, (0.1, 0.2, 9.8), "x"), _gps, CDR_IMU_DEF, CDR_GPS_DEF
+        )
+    else:
+        imu = _imu_payload(SEQ, STAMP, FRAME, QUAT, ANGVEL, LINACC)
+        gps, imu_def, gps_def = _gps_payload, IMU_DEF, GPS_DEF
+    conns = [
+        ConnectionInfo(1, "/imu", "sensor_msgs/Imu", "imu_md5", imu_def),
+        ConnectionInfo(2, "/gps", "nav_msgs/Gps", "gps_md5", gps_def),
+    ]
+    msgs = [
+        (1, 1_000, imu), (2, 2_000, gps(0)), (1, 3_000, imu),
+        (2, 4_000, gps(1)), (2, 5_000, gps(2)),
+    ]
+    if kind == "db3":
+        write_db3(path, conns, msgs)
+    elif kind == "mcap":
+        from rosbag2parquet_spark.sources.mcap import write_mcap
+
+        write_mcap(
+            path, conns, msgs, encoding="ros1", schema_encoding="ros1msg",
+            chunk_messages=2,
+        )
+    else:
+        (write_rosbag if kind == "rosbag" else write_bag)(path, conns, msgs)
+    return path
+
+
+def test_convert_bag_topic_and_time_filter(spark, subset_bag, tmp_path):
     """topics/start_ns/end_ns convert a SUBSET (the `rosbag filter`
-    workflow): only the selected topic's table exists, the time range
-    prunes rows, and seqno renumbers contiguously."""
+    workflow) in every grammar: only the selected topic's table exists,
+    the time range prunes rows, and seqno renumbers contiguously."""
     out = str(tmp_path / "subset")
     info = convert_bag(
-        spark, two_type_bag, out, topics=["/gps"], start_ns=2_000, end_ns=5_000
+        spark, subset_bag, out, topics=["/gps"], start_ns=2_000, end_ns=5_000
     )
     assert info.count == 2  # gps at 2k and 4k; 5k excluded by end, imu by topic
+    msgs = spark.read.parquet(os.path.join(out, "Messages")).orderBy("seqno")
+    assert [(m.seqno, m.time_nsec, m.connection_id) for m in msgs.collect()] == [
+        (0, 2_000, 2), (1, 4_000, 2),
+    ]
     gps = spark.read.parquet(os.path.join(out, "nav_msgs_Gps"))
     assert sorted(r.seqno for r in gps.collect()) == [0, 1]
     assert not os.path.isdir(os.path.join(out, "sensor_msgs_Imu"))
+    conns = spark.read.parquet(os.path.join(out, "Connections")).collect()
+    assert [(c.connection_id, c.topic) for c in conns] == [(2, "/gps")]
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="no connections match"):
-        convert_bag(spark, two_type_bag, str(tmp_path / "x"), topics=["/nope"])
+        convert_bag(spark, subset_bag, str(tmp_path / "x"), topics=["/nope"])
 
 
 def test_convert_bag_native_arrays(spark, two_type_bag, tmp_path):

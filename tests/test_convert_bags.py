@@ -245,16 +245,27 @@ def test_magic_dispatch_overrides_extension(spark, tmp_path):
     assert imu_tbl.count() == 2
 
 
-def test_single_header_walk_per_bag(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("single", [True, False], ids=["convert_bag", "convert_bags"])
+def test_single_header_walk_per_bag(spark, tmp_path, monkeypatch, single):
     """The driver process walks each rosbag's header exactly ONCE, however
     many consumers need the scan (connections dim, bucket width, planner)
-    — ADVICE r4 counted three redundant walks on multi-GB fleets. (The
-    datasource planner worker is a separate process; it gets the chunk
-    refs threaded through an option instead.)"""
+    — ADVICE r4 counted three redundant walks on multi-GB fleets — on the
+    single-bag and the fleet path alike. (The datasource planner worker is
+    a separate process; open_bag's chunk refs reach it through
+    read_messages instead.)"""
     from functools import lru_cache
 
+    from rosbag2parquet_spark.convert import convert_bag
     from rosbag2parquet_spark.sources import rosbag as rb
 
+    planned = []
+    orig_read = rb.read_rosbag
+
+    def recording_read(*args, chunks=None, **kw):
+        planned.append(chunks is not None)
+        return orig_read(*args, chunks=chunks, **kw)
+
+    monkeypatch.setattr(rb, "read_rosbag", recording_read)
     walks = []
     orig = rb._scan_rosbag_uncached.__wrapped__
 
@@ -267,9 +278,13 @@ def test_single_header_walk_per_bag(spark, tmp_path, monkeypatch):
     imu = _imu_payload(SEQ, STAMP, FRAME, QUAT, ANGVEL, LINACC)
     p = str(tmp_path / "one.bag")
     write_rosbag(p, [ConnectionInfo(1, **IMU_CONN)], [(1, 1_000, imu)])
-    info = convert_bags(spark, [p], str(tmp_path / "out"))
+    if single:
+        info = convert_bag(spark, p, str(tmp_path / "out"))
+    else:
+        info = convert_bags(spark, [p], str(tmp_path / "out"))
     assert info.count == 1
     assert walks == [p]
+    assert planned == [True]
 
 
 def test_fleet_remap_broadcast_path(spark, fleet, tmp_path, monkeypatch):
@@ -299,52 +314,67 @@ def test_convert_bags_append_equals_one_fleet(spark, tmp_path):
     must equal converting [A, B] as one fleet: continuous seqno, stable
     connection ids (identities already in the dim keep theirs; new ones
     number after), identical per-type content, and a DDL script that still
-    lists every table."""
+    lists every table. Two inputs: SBAGs with A converted by convert_bags,
+    and rosbags WITHOUT callerid/latching with A converted by convert_bag
+    (the single-bag dim must spell absent fields like the fleet's, or the
+    append duplicates the connection)."""
+    from rosbag2parquet_spark.convert import convert_bag
+
     DEF_A = "uint32 a\nstring s\n"
     DEF_B = "uint32 b\n"
-    conns_a = [ConnectionInfo(1, "/t1", "demo/TypeA", "ma", DEF_A)]
-    conns_b = [
-        ConnectionInfo(1, "/t1", "demo/TypeA", "ma", DEF_A),  # same identity
-        ConnectionInfo(2, "/t2", "demo/TypeB", "mb", DEF_B),  # new identity
-    ]
 
     def enc_a(i):
         s = f"x{i}".encode()
         return struct.pack("<I", i) + struct.pack("<I", len(s)) + s
 
-    msgs_a = [(1, 10**18 + i * 1000, enc_a(i)) for i in range(8)]
     msgs_b = [(1, 10**18 + (100 + i) * 1000, enc_a(100 + i)) for i in range(5)]
     msgs_b += [(2, 10**18 + (200 + i) * 1000, struct.pack("<I", i)) for i in range(4)]
-    pa = str(tmp_path / "a.sbag")
-    pb = str(tmp_path / "b.sbag")
-    write_bag(pa, conns_a, msgs_a)
-    write_bag(pb, conns_b, sorted(msgs_b, key=lambda m: m[1]))
-
-    inc = str(tmp_path / "incremental")
-    convert_bags(spark, [pa], inc)
-    info = convert_bags(spark, [pb], inc, mode="append")
-    assert info.count == 9
-
-    fleet = str(tmp_path / "fleet")
-    convert_bags(spark, [pa, pb], fleet)
-
-    for table in ("Messages", "Connections", "demo_TypeA", "demo_TypeB"):
-        x = spark.read.parquet(os.path.join(inc, table))
-        y = spark.read.parquet(os.path.join(fleet, table))
-        assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0, table
-    seqs = [
-        r.seqno
-        for r in spark.read.parquet(os.path.join(inc, "Messages"))
-        .orderBy("seqno")
-        .collect()
+    cases = [
+        # (ext, writer, first converter, A's local conn id)
+        ("sbag", write_bag, lambda a, out: convert_bags(spark, [a], out), 1),
+        # bag-local ids survive convert_bag, so A's id is the fleet's 0
+        ("bag", write_rosbag, lambda a, out: convert_bag(spark, a, out), 0),
     ]
-    assert seqs == list(range(17))
-    ddl = open(os.path.join(inc, "load_tables.sql")).read()
-    assert "demo_TypeA" in ddl and "demo_TypeB" in ddl
+    for ext, writer, convert_first, cid_a in cases:
+        conns_a = [ConnectionInfo(cid_a, "/t1", "demo/TypeA", "ma", DEF_A)]
+        conns_b = [
+            ConnectionInfo(1, "/t1", "demo/TypeA", "ma", DEF_A),  # same identity
+            ConnectionInfo(2, "/t2", "demo/TypeB", "mb", DEF_B),  # new identity
+        ]
+        msgs_a = [(cid_a, 10**18 + i * 1000, enc_a(i)) for i in range(8)]
+        pa = str(tmp_path / f"a.{ext}")
+        pb = str(tmp_path / f"b.{ext}")
+        writer(pa, conns_a, msgs_a)
+        writer(pb, conns_b, sorted(msgs_b, key=lambda m: m[1]))
+
+        inc = str(tmp_path / f"incremental_{ext}")
+        convert_first(pa, inc)
+        info = convert_bags(spark, [pb], inc, mode="append")
+        assert info.count == 9
+
+        fleet = str(tmp_path / f"fleet_{ext}")
+        convert_bags(spark, [pa, pb], fleet)
+
+        for table in ("Messages", "Connections", "demo_TypeA", "demo_TypeB"):
+            x = spark.read.parquet(os.path.join(inc, table))
+            y = spark.read.parquet(os.path.join(fleet, table))
+            assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0, (
+                ext, table,
+            )
+        seqs = [
+            r.seqno
+            for r in spark.read.parquet(os.path.join(inc, "Messages"))
+            .orderBy("seqno")
+            .collect()
+        ]
+        assert seqs == list(range(17))
+        ddl = open(os.path.join(inc, "load_tables.sql")).read()
+        assert "demo_TypeA" in ddl and "demo_TypeB" in ddl
 
     # appending a SCHEMA-DRIFTED TypeA bag is refused: the new def carries
     # a new md5 identity, and one type may not span two md5s (the
     # reference's FlattenedRosWriter.cpp:287 assert)
+    inc = str(tmp_path / "incremental_sbag")
     conns_drift = [ConnectionInfo(1, "/t1", "demo/TypeA", "mc",
                                   "uint32 a\nuint32 extra\nstring s\n")]
     pc = str(tmp_path / "c.sbag")

@@ -146,10 +146,11 @@ def test_callerid_latching_roundtrip(spark, tmp_path):
     assert (conns[0].callerid, conns[0].latching) == ("/imu_node", "1")
     row = rosbag_connections_df(spark, path).collect()[0]
     assert (row.callerid, row.latching) == ("/imu_node", "1")
-    # absent fields stay NULL (SBAG parity: the dim schema is shared)
+    # absent fields are "" (SBAG/.db3/MCAP parity: one logical connection
+    # has one identity whichever grammar carried it)
     write_rosbag(str(tmp_path / "nocaller.bag"), [CONN], [(3, 10**9, payload)])
     row2 = rosbag_connections_df(spark, str(tmp_path / "nocaller.bag")).collect()[0]
-    assert row2.callerid is None and row2.latching is None
+    assert row2.callerid == "" and row2.latching == ""
 
 
 def test_large_chunk_scan_derived_shift(spark, tmp_path):

@@ -138,8 +138,21 @@ def test_topics_and_connections(spark, db3_bag):
         "callerid", "latching",
     ]
     assert conns.count() == 2
-    with pytest.raises(ValueError, match="no message definition"):
-        rosbag2_connections_df(spark, db3_bag, {})
+    # no embedded defs and none supplied: msg_def stays NULL (the converter
+    # refuses it, see test_convert_bag_rosbag2_requires_msgdefs)
+    rows = rosbag2_connections_df(spark, db3_bag, {}).collect()
+    assert [r.msg_def for r in rows] == [None, None]
+
+
+def test_bag_info_db3_without_defs(spark, db3_bag):
+    """`rosbag info` stats never read definition text, so a pre-Iron .db3
+    (no message_definitions table) reports without ``msgdefs``."""
+    from rosbag2parquet_spark.info import bag_info
+
+    rows = {(r.datatype, r.topic): r.n_msgs for r in bag_info(spark, db3_bag).collect()}
+    assert rows[("geometry_msgs/PoseLite", "/pose")] == 20
+    assert rows[("sensor_msgs/ImuLite", "/imu")] == 20
+    assert rows[("<all>", "<all>")] == 40
 
 
 def test_scan_partitioned(spark, db3_bag):
@@ -219,10 +232,15 @@ def test_convert_bag_rosbag2(spark, db3_bag, tmp_path):
 
 
 def test_convert_bag_rosbag2_requires_msgdefs(spark, db3_bag, tmp_path):
+    """A pre-Iron .db3 with no caller msgdefs is refused before any write."""
     from rosbag2parquet_spark.convert import convert_bag
 
+    out = str(tmp_path / "nope")
     with pytest.raises(ValueError, match="msgdefs"):
-        convert_bag(spark, db3_bag, str(tmp_path / "nope"))
+        convert_bag(spark, db3_bag, out)
+    with pytest.raises(ValueError, match="no message definition"):
+        convert_bag(spark, db3_bag, out, msgdefs={})
+    assert not os.path.exists(os.path.join(out, "Messages"))
 
 
 def test_fleet_db3_without_defs_fails_loudly(db3_bag, spark, tmp_path):
@@ -760,7 +778,7 @@ def test_db3_time_pushdown(spark, db3_bag):
 
 def test_convert_bag_time_subset_db3(spark, db3_bag_embedded, tmp_path):
     """convert_bag's start/end over .db3 — the pushdown rides through
-    load_bag; seqno renumbers contiguously over the kept rows."""
+    read_messages; seqno renumbers contiguously over the kept rows."""
     from rosbag2parquet_spark.convert import convert_bag
 
     t0 = 1_700_000_000_000_000_000

@@ -227,8 +227,8 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
     """Shared measure loop for the .db3 / MCAP walkthrough twins: same
     corpus, same converter, same exclusions as run()."""
     from rosbag2parquet_spark.convert import convert_bag
-    from rosbag2parquet_spark.info import load_bag
     from rosbag2parquet_spark.session import get_spark
+    from rosbag2parquet_spark.sources import open_bag, read_messages
 
     work = tempfile.mkdtemp(prefix=f"bench_convert_{suffix}_")
     try:
@@ -237,7 +237,7 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
         bag_mb = os.path.getsize(bag) / (1 << 20)
         spark = spark or get_spark("bench_convert")
         spark.range(1).count()
-        load_bag(spark, bag, num_partitions=4)[0].limit(1).count()
+        read_messages(spark, open_bag(bag), num_partitions=4).limit(1).count()
         t0 = time.perf_counter()
         info = convert_bag(spark, bag, os.path.join(work, "out"), num_partitions=32)
         dt = time.perf_counter() - t0
