@@ -1862,6 +1862,8 @@ def convert_bags(
                         "dim; cannot append"
                     )
                 raw_ids[raw] = r.connection_id
+                # every existing id is taken, including a skipped spelling's
+                next_id = max(next_id, r.connection_id + 1)
                 # layouts written before callerid/latching were normalized
                 # hold NULL where open_bag now reports "" — and an append
                 # onto one may hold both spellings; the first id keeps it
@@ -1873,7 +1875,6 @@ def convert_bags(
                     continue
                 gid[key] = r.connection_id
                 dim_rows.append(ConnRow(r.connection_id, *key))
-                next_id = max(next_id, r.connection_id + 1)
             n_seeded = len(gid)
         msg_path = os.path.join(out_dir, "Messages")
         if os.path.isdir(msg_path):

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.sources import conn_dim_df, open_bag, read_messages
+from rosbag2parquet_spark.sources.baglike import bag_format
 
 
 def bag_info(spark: SparkSession, path: str) -> DataFrame:
@@ -55,7 +56,7 @@ def print_info(spark: SparkSession, path: str) -> None:
         tag = "TOTAL" if r.datatype == "<all>" else f"{r.datatype} {r.topic}"
         freq = f" @ {r.freq_hz} Hz" if r.freq_hz is not None else ""
         print(f"  {tag}: {r.n_msgs} msgs, {r.total_bytes} bytes{freq}")
-    if open_bag(path).format == "mcap":
+    if bag_format(path) == "mcap":
         from rosbag2parquet_spark.sources.mcap import (
             mcap_attachment_stats,
             mcap_metadata,

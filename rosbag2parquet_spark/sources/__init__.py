@@ -164,16 +164,15 @@ def read_messages(
 ):
     """(offset, time_ns, conn_id, data) for any grammar. Time and
     connection bounds push into the source plan where the container can
-    skip (rosbag ChunkInfo, MCAP ChunkIndex, the .db3 sqlite WHERE) and are
-    always applied as exact filters on the rows that survive.
+    skip (rosbag ChunkInfo, MCAP ChunkIndex, the .db3 sqlite WHERE), and
+    those readers apply them exactly; SBAG has no index to skip with, so
+    the exact filters are applied here for it alone.
 
     Resume cursors: ``start_offset`` where offsets are append-stable —
     .db3 (sqlite rowids) and SBAG (byte offsets under pure append);
     rosbag/MCAP offsets are synthetic chunk-index encodings whose shift can
     change as the file grows, so it is refused there. ``start_chunk`` is
     the MCAP chunk-index cursor."""
-    from pyspark.sql import functions as F
-
     fmt = bag.format
     if start_offset is not None and fmt in ("rosbag", "mcap"):
         raise ValueError(
@@ -208,16 +207,18 @@ def read_messages(
             start_offset=start_offset,
         )
     else:
+        from pyspark.sql import functions as F
+
         from rosbag2parquet_spark.sources.baglike import read_bag
 
         df = read_bag(
             spark, bag.path, num_partitions=num_partitions,
             start_offset=start_offset,
         )
-    if conn_ids is not None:
-        df = df.filter(F.col("conn_id").isin([int(c) for c in conn_ids]))
-    if start_ns is not None:
-        df = df.filter(F.col("time_ns") >= start_ns)
-    if end_ns is not None:
-        df = df.filter(F.col("time_ns") < end_ns)
+        if conn_ids is not None:
+            df = df.filter(F.col("conn_id").isin([int(c) for c in conn_ids]))
+        if start_ns is not None:
+            df = df.filter(F.col("time_ns") >= start_ns)
+        if end_ns is not None:
+            df = df.filter(F.col("time_ns") < end_ns)
     return df

@@ -286,14 +286,3 @@ def read_bag(
     if start_offset is not None:
         reader = reader.option("startOffset", str(int(start_offset)))
     return reader.load()
-
-
-def connections_df(spark: SparkSession, path: str) -> DataFrame:
-    """The Connections dim from the header (reference
-    FlattenedRosWriter.cpp:30-32 snapshot at open). Emits the reference's
-    full 7-column shape (README.md:35-42) — callerid/latching are padded
-    "" for SBAG, which doesn't carry them — so single-bag and fleet
-    conversions produce union-compatible Connections tables."""
-    from rosbag2parquet_spark.sources import conn_dim_df, open_bag
-
-    return conn_dim_df(spark, open_bag(path).conn_rows)

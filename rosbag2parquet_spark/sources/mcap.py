@@ -664,15 +664,6 @@ def mcap_connection_rows(path: str) -> list[tuple]:
     return rows
 
 
-def mcap_connections_df(spark: SparkSession, path: str) -> DataFrame:
-    """Connections dim from the embedded Channel+Schema records — the
-    engine's 7-column shape; see :func:`mcap_connection_rows` for the
-    per-encoding msg_def contract."""
-    from rosbag2parquet_spark.sources import conn_dim_df
-
-    return conn_dim_df(spark, mcap_connection_rows(path))
-
-
 def _parse_attachment(buf: bytes, s: int, ln: int, path: str) -> tuple:
     """Attachment payload → (log_time, create_time, name, media_type, data);
     validates the record CRC when the writer set it."""

@@ -550,15 +550,6 @@ def prune_chunks(
     return out
 
 
-def rosbag_connections_df(spark: SparkSession, path: str) -> DataFrame:
-    """The Connections dim with the reference's full column set including
-    callerid and latching (FlattenedRosWriter.cpp:209-224, README.md:35-42);
-    absent fields are "" like every other grammar's."""
-    from rosbag2parquet_spark.sources import conn_dim_df, open_bag
-
-    return conn_dim_df(spark, open_bag(path).conn_rows)
-
-
 def seqno_bucket_width(path: str) -> int:
     """Bucket width for `assign_seqno` over this bag's offsets: a multiple
     of the chunk stride sized so the driver-side offset map stays ≤ ~64

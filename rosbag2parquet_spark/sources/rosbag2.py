@@ -254,22 +254,6 @@ def read_embedded_msgdefs(path: str) -> dict[str, str]:
     return out
 
 
-def rosbag2_connections_df(
-    spark: SparkSession, path: str, msgdefs: dict[str, str] | None = None
-) -> DataFrame:
-    """The Connections dim in the engine's 7-column shape (reference
-    FlattenedRosWriter.cpp:209-224). md5sum/callerid/latching are padded ""
-    — the sqlite3 storage schema carries none of them. Definition text is
-    resolved embedded-first (``message_definitions`` table, Iron+) with
-    caller-supplied ``msgdefs`` overriding/filling — so the common modern
-    bag needs no side channel, matching the reference's
-    schema-travels-in-the-bag property (README.md:116-117). An unresolved
-    type's msg_def is NULL; the converter refuses it before any job."""
-    from rosbag2parquet_spark.sources import conn_dim_df, open_bag
-
-    return conn_dim_df(spark, open_bag(path, msgdefs).conn_rows)
-
-
 _SCAN_SCHEMA = T.StructType(
     [
         T.StructField("offset", T.LongType(), False),

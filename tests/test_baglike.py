@@ -9,9 +9,9 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 from rosbag2parquet_spark.sources.baglike import (
     ConnectionInfo,
-    connections_df,
     read_bag,
     write_bag,
 )
@@ -78,7 +78,7 @@ def test_bag_scan_rows_and_order(spark, bag_path):
 
 def test_connections_header_round_trip(spark, bag_path):
     """Connections metadata round-trips (ref test :229-244)."""
-    conns = connections_df(spark, bag_path).collect()
+    conns = conn_dim_df(spark, open_bag(bag_path).conn_rows).collect()
     assert len(conns) == 1
     c = conns[0]
     assert (c.connection_id, c.topic, c.datatype, c.md5sum) == (
@@ -92,7 +92,7 @@ def test_decode_flattened_values(spark, bag_path):
     frame_id, stamp pair, orientation_w, angular_velocity_x — through the
     full distributed pipeline (DataSource scan → mapInPandas decode)."""
     msgs = read_bag(spark, bag_path, num_partitions=2)
-    conns = connections_df(spark, bag_path).collect()[0]
+    conns = conn_dim_df(spark, open_bag(bag_path).conn_rows).collect()[0]
     flat = decode_messages(msgs, conns.datatype, conns.msg_def)
     rows = flat.orderBy("offset").collect()
     assert len(rows) == 2
@@ -134,7 +134,7 @@ def test_bag_to_parquet_end_to_end(spark, bag_path, tmp_path):
     from rosbag2parquet_spark.convert import convert
 
     msgs = read_bag(spark, bag_path)
-    conns = connections_df(spark, bag_path)
+    conns = conn_dim_df(spark, open_bag(bag_path).conn_rows)
     stream = (
         msgs.join(F.broadcast(conns), msgs.conn_id == conns.connection_id)
         .select(

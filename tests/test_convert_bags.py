@@ -389,6 +389,60 @@ def test_convert_bags_append_equals_one_fleet(spark, tmp_path):
     assert msgs.count() == 17
 
 
+def test_append_onto_both_spellings_keeps_ids_unique(spark, tmp_path):
+    """A layout appended to before callerid/latching were normalized holds
+    one identity under two spellings (NULL and ""), at ids 0 and 1. A new
+    identity appended onto it must number after BOTH — reusing the skipped
+    spelling's id would give the Connections dim two rows with one id."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rosbag2parquet_spark.convert import convert_bag
+
+    DEF_A = "uint32 a\n"
+    DEF_B = "uint32 b\n"
+    conn_a = ConnectionInfo(0, "/t1", "demo/TypeA", "ma", DEF_A)
+    pa_bag = str(tmp_path / "a.bag")
+    write_rosbag(pa_bag, [conn_a],
+                 [(0, 10**18 + i * 1000, struct.pack("<I", i)) for i in range(3)])
+    out = str(tmp_path / "layout")
+    convert_bag(spark, pa_bag, out)
+
+    conn_dir = os.path.join(out, "Connections")
+    dim = pq.read_table(conn_dir)
+    assert dim.num_rows == 1
+    row = dim.to_pylist()[0]
+    rows = [
+        dict(row, connection_id=0, callerid=None, latching=None),
+        dict(row, connection_id=1, callerid="", latching=""),
+    ]
+    shutil.rmtree(conn_dir)
+    os.makedirs(conn_dir)
+    pq.write_table(pa.Table.from_pylist(rows, schema=dim.schema),
+                   os.path.join(conn_dir, "part-0.parquet"))
+
+    pc = str(tmp_path / "c.bag")
+    write_rosbag(
+        pc,
+        [ConnectionInfo(1, "/t1", "demo/TypeA", "ma", DEF_A),
+         ConnectionInfo(2, "/t2", "demo/TypeB", "mb", DEF_B)],
+        [(1, 10**18 + 10_000, struct.pack("<I", 7)),
+         (2, 10**18 + 11_000, struct.pack("<I", 8))],
+    )
+    convert_bags(spark, [pc], out, mode="append")
+
+    conns = spark.read.parquet(conn_dir).collect()
+    ids = sorted(r.connection_id for r in conns)
+    assert ids == [0, 1, 2]
+    assert {r.topic for r in conns if r.connection_id == 2} == {"/t2"}
+    msgs = spark.read.parquet(os.path.join(out, "Messages"))
+    appended = {r.connection_id for r in msgs.where(msgs.seqno >= 3).collect()}
+    # the known identity keeps the first id; the new one takes the next free
+    assert appended == {0, 2}
+
+
 def test_append_evolve_additive_schema(spark, tmp_path):
     """Schema evolution across recording sessions (the case the reference's
     hard md5 assert refuses outright): a later bag's definition GAINS a

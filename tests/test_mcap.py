@@ -7,10 +7,10 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo, bag_format
 from rosbag2parquet_spark.sources.mcap import (
     is_mcap,
-    mcap_connections_df,
     mcap_serialization,
     read_mcap,
     scan_mcap,
@@ -67,7 +67,7 @@ def test_scan_dim(mcap_file):
 
 
 def test_connections_df(spark, mcap_file):
-    conns = mcap_connections_df(spark, mcap_file)
+    conns = conn_dim_df(spark, open_bag(mcap_file).conn_rows)
     rows = {r.connection_id: r for r in conns.collect()}
     assert rows[1].topic == "/pose" and rows[1].datatype == "geometry_msgs/PoseLite"
     assert rows[2].msg_def == IMU_DEF
@@ -601,7 +601,7 @@ def test_idl_only_schema_blob_preserves(spark, tmp_path):
     path = str(tmp_path / "idl.mcap")
     write_mcap(path, CONNS, msgs, schema_encoding="ros2idl",
                chunk_messages=7)
-    conns = mcap_connections_df(spark, path).collect()
+    conns = conn_dim_df(spark, open_bag(path).conn_rows).collect()
     assert all(c.msg_def == "" for c in conns)
 
     out = str(tmp_path / "out_idl")

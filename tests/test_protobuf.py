@@ -294,10 +294,10 @@ def _pb_mcap(tmp_path, n=30, name="pb.mcap", extra_conns=(), extra_msgs=()):
 
 
 def test_connections_df_carries_marker(spark, tmp_path):
-    from rosbag2parquet_spark.sources.mcap import mcap_connections_df
+    from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 
     path = _pb_mcap(tmp_path)
-    rows = mcap_connections_df(spark, path).collect()
+    rows = conn_dim_df(spark, open_bag(path).conn_rows).collect()
     assert len(rows) == 1
     assert rows[0].msg_def.startswith(PROTOBUF_DEF_PREFIX)
     assert fds_from_msgdef(rows[0].msg_def) == FDS

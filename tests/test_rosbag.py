@@ -7,11 +7,11 @@ values/keys/contiguity the reference asserts."""
 import pytest
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo
 from rosbag2parquet_spark.sources.decode import decode_messages
 from rosbag2parquet_spark.sources.rosbag import (
     read_rosbag,
-    rosbag_connections_df,
     scan_rosbag,
     write_rosbag,
 )
@@ -64,7 +64,7 @@ def test_golden_decode_values(spark, bag_path):
     """Reference assertions :283-301: header_seq, frame_id, stamp pair,
     orientation_w through the full distributed pipeline."""
     msgs = read_rosbag(spark, bag_path)
-    conns = rosbag_connections_df(spark, bag_path).collect()[0]
+    conns = conn_dim_df(spark, open_bag(bag_path).conn_rows).collect()[0]
     rows = decode_messages(msgs, conns.datatype, conns.msg_def).orderBy("offset").collect()
     assert len(rows) == 2
     for r in rows:
@@ -83,7 +83,7 @@ def test_rosbag_to_parquet_end_to_end(spark, bag_path, tmp_path):
     from rosbag2parquet_spark.convert import convert
 
     msgs = read_rosbag(spark, bag_path)
-    conns = rosbag_connections_df(spark, bag_path)
+    conns = conn_dim_df(spark, open_bag(bag_path).conn_rows)
     stream = (
         msgs.join(F.broadcast(conns), msgs.conn_id == conns.connection_id)
         .select(
@@ -144,12 +144,13 @@ def test_callerid_latching_roundtrip(spark, tmp_path):
     write_rosbag(path, [conn], [(7, 10**9, payload)])
     conns, _ = scan_rosbag(path)
     assert (conns[0].callerid, conns[0].latching) == ("/imu_node", "1")
-    row = rosbag_connections_df(spark, path).collect()[0]
+    row = conn_dim_df(spark, open_bag(path).conn_rows).collect()[0]
     assert (row.callerid, row.latching) == ("/imu_node", "1")
     # absent fields are "" (SBAG/.db3/MCAP parity: one logical connection
     # has one identity whichever grammar carried it)
     write_rosbag(str(tmp_path / "nocaller.bag"), [CONN], [(3, 10**9, payload)])
-    row2 = rosbag_connections_df(spark, str(tmp_path / "nocaller.bag")).collect()[0]
+    nocaller = open_bag(str(tmp_path / "nocaller.bag"))
+    row2 = conn_dim_df(spark, nocaller.conn_rows).collect()[0]
     assert row2.callerid == "" and row2.latching == ""
 
 

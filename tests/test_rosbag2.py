@@ -9,6 +9,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.sources import conn_dim_df, open_bag
 from rosbag2parquet_spark.sources.msgdef import parse_msgdef, to_struct_type
 from rosbag2parquet_spark.sources.rosbag2 import (
     CDR_LE_HEADER,
@@ -17,7 +18,6 @@ from rosbag2parquet_spark.sources.rosbag2 import (
     make_cdr_decoder,
     read_rosbag2,
     read_topics,
-    rosbag2_connections_df,
 )
 
 POSE_DEF = """std_msgs/Header header
@@ -132,7 +132,7 @@ def test_topics_and_connections(spark, db3_bag):
         (1, "/pose", "geometry_msgs/PoseLite"),
         (2, "/imu", "sensor_msgs/ImuLite"),
     ]
-    conns = rosbag2_connections_df(spark, db3_bag, MSGDEFS)
+    conns = conn_dim_df(spark, open_bag(db3_bag, MSGDEFS).conn_rows)
     assert conns.columns == [
         "connection_id", "topic", "datatype", "md5sum", "msg_def",
         "callerid", "latching",
@@ -140,7 +140,7 @@ def test_topics_and_connections(spark, db3_bag):
     assert conns.count() == 2
     # no embedded defs and none supplied: msg_def stays NULL (the converter
     # refuses it, see test_convert_bag_rosbag2_requires_msgdefs)
-    rows = rosbag2_connections_df(spark, db3_bag, {}).collect()
+    rows = conn_dim_df(spark, open_bag(db3_bag, {}).conn_rows).collect()
     assert [r.msg_def for r in rows] == [None, None]
 
 
@@ -411,7 +411,7 @@ def test_embedded_msgdefs_read(db3_bag_embedded, db3_bag):
 
 
 def test_connections_from_embedded_defs(spark, db3_bag_embedded):
-    conns = rosbag2_connections_df(spark, db3_bag_embedded).collect()
+    conns = conn_dim_df(spark, open_bag(db3_bag_embedded).conn_rows).collect()
     assert {(c.datatype, c.msg_def) for c in conns} == {
         ("geometry_msgs/PoseLite", POSE_DEF),
         ("sensor_msgs/ImuLite", IMU_DEF),
@@ -420,8 +420,8 @@ def test_connections_from_embedded_defs(spark, db3_bag_embedded):
     override = {"sensor_msgs/ImuLite": IMU_DEF + "# override\n"}
     conns2 = {
         c.datatype: c.msg_def
-        for c in rosbag2_connections_df(
-            spark, db3_bag_embedded, override
+        for c in conn_dim_df(
+            spark, open_bag(db3_bag_embedded, override).conn_rows
         ).collect()
     }
     assert conns2["sensor_msgs/ImuLite"].endswith("# override\n")
